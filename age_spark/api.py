@@ -458,7 +458,13 @@ class AgeSession:
             rows = [(ln,) for ln in plan.splitlines()]
             df = self.spark.createDataFrame(rows, "`QUERY PLAN` string")
             return CypherResult(df=df, graph=graph)
-        ast = parse_cypher(query)
+        return self._run(graph, query, parse_cypher(query), params, use_plan_cache)
+
+    def _run(self, graph: Graph, query: str, ast, params: Optional[dict],
+             use_plan_cache: bool = True) -> CypherResult:
+        """Compile and bind a parsed statement: the plan cache, the
+        session-aware QueryContext, the mutable-graph release and the
+        catalog follow — the one path behind cypher() and prepare()."""
         cache_key = None
         if not params and use_plan_cache:
             try:
@@ -513,13 +519,11 @@ class AgeSession:
 
     def prepare(self, graph: Graph, stmt: str):
         """age_prepare_cypher parity (age_session_info.c:30): parse once,
-        bind $params per execution."""
+        bind $params per execution through cypher()'s compile path."""
         ast = parse_cypher(stmt)
 
         def run(params: Optional[dict] = None) -> CypherResult:
-            ctx = QueryContext(spark=self.spark, graph=graph, params=params, enable_containment=self.enable_containment)
-            df, out_ctx = compile_query(ctx, ast)
-            return CypherResult(df=df, graph=out_ctx.graph)
+            return self._run(graph, stmt, ast, params)
 
         return run
 

@@ -44,24 +44,6 @@ from .exprs import ExprScope, compile_expr
 ENTRY_ID_BITS = 48
 
 
-def entity_struct_cols(kind: str) -> list[str]:
-    if kind == "vertex":
-        return ["id", "label", "properties"]
-    return ["id", "start_id", "end_id", "label", "properties"]
-
-
-def vertex_struct(df_cols_prefix: str = "") -> Column:
-    return F.struct(
-        F.col("id"), F.col("label"), F.col("properties")
-    )
-
-
-def edge_struct() -> Column:
-    return F.struct(
-        F.col("id"), F.col("start_id"), F.col("end_id"), F.col("label"), F.col("properties")
-    )
-
-
 _MISS = object()
 
 

@@ -208,12 +208,6 @@ def _replace_chain(s: "F.Column", merges: list[tuple[str, str]]) -> "F.Column":
     return s
 
 
-def _apply_merges_column(word: "F.Column", merges: list[tuple[str, str]]) -> "F.Column":
-    """Symbol array of a word after applying ``merges`` in rank order —
-    pure column ops (see _sym_string/_replace_chain)."""
-    return F.split(_replace_chain(_sym_string(word), merges), SEP)
-
-
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],

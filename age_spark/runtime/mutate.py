@@ -42,16 +42,6 @@ from ..catalog import DEFAULT_ELABEL, DEFAULT_VLABEL  # label_commands.h:25-26
 _ROWID = "_rowid"
 
 
-def _with_rowid(df: DataFrame) -> DataFrame:
-    """Dense global row numbering without a global sort — JVM-side
-    (see graph.dense_row_numbers; an RDD zipWithIndex would serialize every
-    row through the Python workers)."""
-    from ..graph import DENSE_ROW_COL, dense_row_numbers
-
-    numbered, _ = dense_row_numbers(df)
-    return numbered.withColumnRenamed(DENSE_ROW_COL, _ROWID)
-
-
 def _unit_df(ctx: QueryContext) -> DataFrame:
     return ctx.spark.range(1).select(F.lit(0).alias("_unit"))
 

@@ -16,10 +16,19 @@ reference (``age_vle.c:27-39``):
   - unbounded ``[*]`` terminates by edge depletion; we additionally cap depth
     at ``DEFAULT_MAX_HOPS`` (documented deviation — on cycle-rich 100 TB
     graphs unbounded enumeration is factorial, the cap is the scale-safe
-    choice; raise it per-query when needed).
+    choice; raise it per-query when needed).  The same cap bounds the
+    shortest-path ``min_hops`` regime, which enumerates edge-distinct paths
+    too.  A shortest-path BFS with a NULL ``max_hops`` is unbounded, like the
+    reference's: visited-set pruning guarantees it drains.
 
 Per-hop state is (src, cur, edges ARRAY<edge>, nodes ARRAY<vertex>); the
 uniqueness filter is an ARRAY containment check evaluated JVM-side.
+
+Every loop is a sequence of frontier rounds built from one kernel: a gated
+frontier join (``_gated_join``), one stop-decision job per round
+(``_round_probe``), the two-hops-per-round set BFS (``_two_hop_rounds``) and
+the path-state helpers (``_path_frontier``, ``_extend``,
+``_append_interior``, ``_first_path_per_pair``).
 """
 
 from __future__ import annotations
@@ -86,6 +95,193 @@ def _oriented_edges(
     return fwd.unionByName(rev_noloop)
 
 
+# ---- the frontier-round kernel
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _round_probe(pieces, edges=None, ekey=None, front=None, fkey="cur"):
+    """A round's stop decision in ONE job: the row count of each of the
+    round's (just checkpointed) pieces as a marker-keyed aggregate, plus —
+    when ``edges`` is given — a LocalLimit(1) branch telling whether any
+    edge meets ``front`` (``edges[ekey] == front[fkey]``).  When none does,
+    the next round's expansion is provably empty BEFORE its anti-join or
+    isomorphism filter (a superset test), so its checkpoint plans — each an
+    edge pass at AQE plan time — are never built.
+
+    Orientation (measured): STREAM the edges and hash the small,
+    materialized frontier — frontier-semi-edges would build a hash table
+    over the whole edge table before LocalLimit could fire (~2x the cost at
+    sf0.1), while edges-semi-frontier short-circuits at the first matching
+    edge in continuing rounds.  No broadcast hint: the frontier's blocks are
+    materialized, so AQE sizes the build side at runtime and an oversized
+    frontier degrades to a shuffle instead of a driver-killing broadcast.
+
+    A piece whose size does not matter beyond emptiness is passed as
+    ``piece.limit(1)``: counting every row of a path frontier measured
+    ~10% slower on the unbounded ``[*1..]`` lane than the limited branch.
+
+    Returns ([count per piece], whether an edge meets the frontier)."""
+    branches = [p.select(F.lit(i).alias("_h")) for i, p in enumerate(pieces)]
+    if edges is not None:
+        branches.append(
+            edges.join(front, edges[ekey] == front[fkey], "left_semi")
+            .select(F.lit(-1).alias("_h"))
+            .limit(1)
+        )
+    counts = {
+        r["_h"]: r["n"]
+        for r in _union_all(branches).groupBy("_h").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    return [counts.get(i, 0) for i in range(len(pieces))], -1 in counts
+
+
+def _once(build):
+    """Memoize a zero-argument builder (the gated join's fallback table is
+    built only if some round ever needs it)."""
+    cell = []
+
+    def get():
+        if not cell:
+            cell.append(build())
+        return cell[0]
+
+    return get
+
+
+def _gated_join(front, fkey: str, n_front: int, edges, ekey: str, partitioned):
+    """One hop's frontier join.  The frontier is usually tiny next to the
+    edge table: below _SP_BCAST_ROWS broadcast it into a join against the
+    edge scan (no edge shuffle — the scan streams map-side; ``n_front`` may
+    be a proxy, a wrong guess costs one hop's plan shape, never
+    correctness).  Past the gate, join against ``partitioned()``: the edge
+    table hash-partitioned on the join key ONCE (LogicalRDD keeps the
+    partitioning through localCheckpoint), so the big table never
+    re-exchanges per hop — the property that matters at 100 TB."""
+    if n_front < _SP_BCAST_ROWS:
+        return F.broadcast(front).join(edges, front[fkey] == edges[ekey])
+    part = partitioned()
+    return front.join(part, front[fkey] == part[ekey])
+
+
+def _two_hop_rounds(front, n_front, seen, n_seen, expand, edges, ekey, fkey, max_hops):
+    """Set BFS two hops per driver round, from ``front`` until the frontier
+    drains or ``max_hops`` hops are done (None: until it drains).
+
+    ``expand(front, n_front, seen, n_seen)`` returns the next hop's lazy
+    frontier, anti-joined against ``seen`` (the pieces are disjoint, so the
+    visited set is their plain lazy union — no dedup, no checkpoint of its
+    own).  Hop 2k+1 rides as a LAZY checkpoint whose stage runs inside the
+    round's single probe job, so the sequential scheduling rounds — the
+    dominant BFS cost at local scale — halve without changing the per-hop
+    joins that matter at 100 TB.  The second hop's broadcast gates use the
+    round-entry frontier size as the proxy.  ``seen`` (a list of pieces)
+    grows in place; returns ([(hop, piece)] for every non-empty hop, the
+    visited row count)."""
+    layers = []
+    hop = 1
+    while max_hops is None or hop <= max_hops:
+        s1 = expand(front, n_front, _union_all(seen), n_seen).localCheckpoint(eager=False)
+        if hop == max_hops:  # odd tail: single-hop round
+            (n1,), _ = _round_probe([s1])
+            if n1:
+                layers.append((hop, s1))
+                seen.append(s1)
+                n_seen += n1
+            break
+        # NOTE (measured, negative): fusing s1+s2 into ONE marker-split
+        # checkpointed union per round looked like a driver-round saving
+        # but was 4-6x SLOWER — without s1's own checkpoint, every
+        # broadcast-exchange build over the lazy s1 subtree (s2's frontier
+        # side, the visited anti-join side, the union branch) re-runs s1's
+        # whole expansion INCLUDING its edge-table pass; broadcast builds
+        # do not reuse the inner shuffle exchange across branches.  The
+        # per-hop checkpoint is load-bearing: it pins each hop's edge pass
+        # to exactly one execution.
+        s2 = expand(s1, n_front, _union_all(seen + [s1]), n_seen + n_front).localCheckpoint(
+            eager=False
+        )
+        (n1, n2), more = _round_probe([s1, s2], edges, ekey, s2, fkey)
+        for h, s, n in ((hop, s1, n1), (hop + 1, s2, n2)):
+            if n == 0:
+                return layers, n_seen
+            layers.append((h, s))
+            seen.append(s)
+            n_seen += n
+        front, n_front = s2, n2
+        hop += 2
+        if not more:
+            break
+    return layers, n_seen
+
+
+# ---- path-state helpers (the path-carrying loops)
+
+
+def _empty_arrays(edge_dt, vddl):
+    """Typed empty (edges, nodes) payload columns."""
+    return (
+        F.expr("array()").cast(f"array<{edge_dt.simpleString()}>").alias("edges"),
+        F.expr("array()").cast(f"array<{vddl}>").alias("nodes"),
+    )
+
+
+def _path_frontier(starts, edge_dt, vddl) -> DataFrame:
+    """Zero-hop path state (src, cur, edges, nodes) from a ``src`` column."""
+    return starts.select(F.col("src"), F.col("src").alias("cur"), *_empty_arrays(edge_dt, vddl))
+
+
+def _extend(frontier, edges, isomorphic: bool) -> DataFrame:
+    """Extend every path by one edge out of its ``cur`` vertex; with
+    ``isomorphic`` the new edge must not already be on the path (the
+    arrival vertex is not appended to ``nodes`` — see _append_interior)."""
+    joined = frontier.join(edges, frontier["cur"] == edges["_s"])
+    if isomorphic:
+        joined = joined.filter(
+            ~F.exists(F.col("edges"), lambda x: x.getField("id") == F.col("_e").getField("id"))
+        )
+    return joined.select(
+        F.col("src"),
+        F.col("_d").alias("cur"),
+        F.concat(F.col("edges"), F.array(F.col("_e"))).alias("edges"),
+        F.col("nodes"),
+    )
+
+
+def _append_interior(paths, vscan) -> DataFrame:
+    """Append the arrival vertex to ``nodes`` for paths that continue: it
+    is an interior vertex of every longer path (at emission it is the
+    endpoint, so emit BEFORE appending)."""
+    vtable = vscan.select(
+        F.col("id").alias("_vid"),
+        F.struct(F.col("id"), F.col("label"), F.col("properties")).alias("_v"),
+    )
+    return paths.join(vtable, paths["cur"] == vtable["_vid"]).select(
+        "src", "cur", "edges", F.concat(F.col("nodes"), F.array(F.col("_v"))).alias("nodes")
+    )
+
+
+def _first_path_per_pair(paths) -> DataFrame:
+    """One deterministic path per (src, dst): the least edge-id sequence."""
+    return paths.withColumn(
+        "_rn",
+        F.row_number().over(
+            Window.partitionBy("src", "dst").orderBy(
+                F.transform(F.col("edges"), lambda x: x.getField("id"))
+            )
+        ),
+    ).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def _emit(paths, hop) -> DataFrame:
+    return paths.select("src", F.col("cur").alias("dst"), "edges", "nodes", F.lit(hop).alias("hops"))
+
+
 def vle_pairs(
     graph,
     types: Optional[list[str]],
@@ -122,7 +318,6 @@ def vle_pairs(
     forward twin of shortest_path's target pruning).  The destination
     join after the traversal remains the semantic gate.
     """
-    spark = graph.spark
     edges_lazy = _oriented_edges(graph, types, direction, slim=slim, edge_filter=edge_filter)
     if slim and edge_filter is None:
         # Slim traversal state is (edge-id, src, dst) — query-independent
@@ -138,7 +333,6 @@ def vle_pairs(
         )
     else:
         edges = edges_lazy
-    edge_dt = edges.schema["_e"].dataType
 
     # backward distance-to-target levels, built lazily INSIDE the one-job
     # plan (bounded case only): dist_leq[r] = ids within <= r reverse hops
@@ -175,8 +369,7 @@ def vle_pairs(
                 .select(F.col("_rd").alias("_pv"))
                 .distinct()
             )
-            cum = dist_leq[-1].unionByName(nxt_level).distinct()
-            dist_leq.append(cum)
+            dist_leq.append(dist_leq[-1].unionByName(nxt_level).distinct())
             level = nxt_level
 
     if seeds is None:
@@ -187,47 +380,13 @@ def vle_pairs(
         # caller's join-back) — dedup unless the caller proved uniqueness
         seeds = seeds.distinct()
 
-    vprops = graph.vertex_property_schema(None)
-    vertex_dt_ddl = _vertex_ddl(graph)
-
-    frontier = seeds.select(
-        F.col("src"),
-        F.col("src").alias("cur"),
-        F.expr("array()").cast(f"array<{edge_dt.simpleString()}>").alias("edges"),
-        F.expr("array()").cast(f"array<{vertex_dt_ddl}>").alias("nodes"),
-    )
-
+    frontier = _path_frontier(seeds, edges.schema["_e"].dataType, _vertex_ddl(graph))
     hard_max = max_hops if max_hops is not None else DEFAULT_MAX_HOPS
-    results: list[DataFrame] = []
-    if min_hops <= 0:
-        results.append(
-            frontier.select(
-                "src", F.col("cur").alias("dst"), "edges", "nodes", F.lit(0).alias("hops")
-            )
-        )
-
-    # interior vertex structs come from joining the vertex table on arrival
-    vtable = graph.scan_vertices(None).select(
-        F.col("id").alias("_vid"),
-        F.struct(F.col("id"), F.col("label"), F.col("properties")).alias("_v"),
-    )
+    results = [_emit(frontier, 0)] if min_hops <= 0 else []
+    vscan = graph.scan_vertices(None)
 
     for hop in range(1, hard_max + 1):
-        joined = frontier.join(edges, frontier["cur"] == edges["_s"])
-        # edge-isomorphism: the new edge must not already be on the path
-        joined = joined.filter(
-            ~F.exists(F.col("edges"), lambda x: x.getField("id") == F.col("_e").getField("id"))
-        )
-        # The arrival vertex is appended to the interior-node list only for
-        # paths that continue (below, hop < hard_max); for emission at this
-        # hop the arrival vertex is the endpoint, not interior, so emit
-        # BEFORE appending.
-        nxt = joined.select(
-            F.col("src"),
-            F.col("_d").alias("cur"),
-            F.concat(F.col("edges"), F.array(F.col("_e"))).alias("edges"),
-            F.col("nodes"),
-        )
+        nxt = _extend(frontier, edges, isomorphic=True)
         if hop >= min_hops:
             emitted = nxt
             if dist_leq is not None:
@@ -235,80 +394,39 @@ def vle_pairs(
                 # the target set inside the same job (broadcast is safe:
                 # dist_leq[0] is bounded by the counted, gated target set)
                 emitted = emitted.join(
-                    F.broadcast(dist_leq[0]),
-                    emitted["cur"] == dist_leq[0]["_pv"],
-                    "left_semi",
+                    F.broadcast(dist_leq[0]), emitted["cur"] == dist_leq[0]["_pv"], "left_semi"
                 )
-            results.append(
-                emitted.select(
-                    "src", F.col("cur").alias("dst"), "edges", "nodes", F.lit(hop).alias("hops")
-                )
-            )
-        if hop < hard_max:
-            if dist_leq is not None:
-                # continuing rows must still be able to REACH a target in
-                # the remaining hops: prune against the backward closure
-                # remaining = hard_max - hop edges left to travel: the
-                # arrival must be within that distance of some target.
-                # Closure levels are size-unbounded -> no broadcast hint;
-                # AQE decides (see the dist_leq comment above).
-                allowed = dist_leq[min(hard_max - hop, len(dist_leq) - 1)]
-                nxt = nxt.join(
-                    allowed,
-                    nxt["cur"] == allowed["_pv"],
-                    "left_semi",
-                )
-            if not slim:
-                nxt = nxt.join(vtable, nxt["cur"] == vtable["_vid"]).select(
-                    F.col("src"),
-                    F.col("cur"),
-                    F.col("edges"),
-                    F.concat(F.col("nodes"), F.array(F.col("_v"))).alias("nodes"),
-                )
-            # cut lineage growth for DEEP traversals: each hop becomes a
-            # fresh plan over materialized state instead of a 2^k nested
-            # plan. For small bounded ranges ([*1..4] and tighter) skip the
-            # checkpoint so Catalyst/AQE optimize the whole traversal as ONE
-            # plan (broadcasts, reordering) with no per-hop materialization.
-            if max_hops is None or hard_max > 4:
-                nxt = nxt.localCheckpoint(eager=False)
-            if max_hops is None:
-                # Unbounded: stop when the frontier drains, and ALSO probe
-                # whether any frontier vertex has an outgoing edge at all —
-                # when none does, the next hop's expansion is provably
-                # empty BEFORE its isomorphism filter, so its checkpoint
-                # plan (a full edge pass at AQE plan time) is never built.
-                # Both branches are LocalLimit(1) probes riding the
-                # just-materialized checkpoint blocks in ONE job (the BFS
-                # drain-probe trick); the edges STREAM against the small
-                # frontier hash, so continuing hops short-circuit at the
-                # first frontier-sourced edge.  The probe ignores edge
-                # isomorphism (a superset test): probe-empty soundly
-                # implies the next hop is empty; probe-nonempty just
-                # continues, exactly like the old isEmpty loop.
-                nonempty = nxt.select(F.lit(1).alias("_h")).limit(1)
-                eprobe = (
-                    edges.join(nxt, edges["_s"] == nxt["cur"], "left_semi")
-                    .select(F.lit(2).alias("_h"))
-                    .limit(1)
-                )
-                flags = {
-                    r["_h"]
-                    for r in nonempty.unionAll(eprobe).distinct().collect()
-                }
-                frontier = nxt
-                if 1 not in flags or 2 not in flags:
-                    break
+            results.append(_emit(emitted, hop))
+        if hop == hard_max:
+            break
+        if dist_leq is not None:
+            # continuing rows must still be able to REACH a target in the
+            # remaining hard_max - hop hops: prune against the backward
+            # closure.  Closure levels are size-unbounded -> no broadcast
+            # hint; AQE decides (see the dist_leq comment above).
+            allowed = dist_leq[min(hard_max - hop, len(dist_leq) - 1)]
+            nxt = nxt.join(allowed, nxt["cur"] == allowed["_pv"], "left_semi")
+        if not slim:
+            nxt = _append_interior(nxt, vscan)
+        # cut lineage growth for DEEP traversals: each hop becomes a fresh
+        # plan over materialized state instead of a 2^k nested plan. For
+        # small bounded ranges ([*1..4] and tighter) skip the checkpoint so
+        # Catalyst/AQE optimize the whole traversal as ONE plan
+        # (broadcasts, reordering) with no per-hop materialization.
+        if max_hops is None or hard_max > 4:
+            nxt = nxt.localCheckpoint(eager=False)
         frontier = nxt
+        if max_hops is None:
+            # Unbounded: stop when the frontier drains or no frontier
+            # vertex has an outgoing edge, in one job riding the
+            # just-materialized checkpoint blocks.
+            (n,), more = _round_probe([nxt.limit(1)], edges, "_s", nxt)
+            if n == 0 or not more:
+                break
 
     if not results:
-        return frontier.select(
-            "src", F.col("cur").alias("dst"), "edges", "nodes", F.lit(0).alias("hops")
-        ).limit(0)
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+        return _emit(frontier, 0).limit(0)
+    return _union_all(results)
 
 
 def _vertex_ddl(graph) -> str:
@@ -347,7 +465,8 @@ def shortest_path_pairs(
     (``age_vle.c:3877/3892``, ``sp_compute_paths``): level-synchronous BFS
     from the start set; at the first level where a target is reached, emit
     the path(s) and stop. ``all_paths=False`` keeps one path per (src, dst)
-    pair; True keeps all minimal-length paths.
+    pair; True keeps all minimal-length paths.  A NULL ``max_hops`` runs
+    until the BFS drains.
 
     A ``min_hops`` ABOVE the true shortest distance switches regimes: plain
     BFS cannot enumerate longer paths, so the search falls back to
@@ -409,22 +528,14 @@ def shortest_path_pairs(
         )
         _probe_counts = graph._sp_probe_memo.get(_memo_key)
         if _probe_counts is None:
-            _probe_counts = {
-                r["_h"]: r["n"]
-                for r in targets.limit(_SWAP_PROBE)
-                .select(F.lit(0).alias("_h"))
-                .unionAll(
-                    starts.limit(4 * _SWAP_PROBE + 8).select(F.lit(1).alias("_h"))
-                )
-                .groupBy("_h")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            _probe_counts = _round_probe(
+                [targets.limit(_SWAP_PROBE), starts.limit(4 * _SWAP_PROBE + 8)]
+            )[0]
             graph._sp_probe_memo[_memo_key] = _probe_counts
             while len(graph._sp_probe_memo) > 32:
                 graph._sp_probe_memo.pop(next(iter(graph._sp_probe_memo)))
-        n_t = _probe_counts.get(0, 0)
-        if n_t < _SWAP_PROBE and _probe_counts.get(1, 0) > 4 * n_t:
+        n_t, n_s = _probe_counts
+        if n_t < _SWAP_PROBE and n_s > 4 * n_t:
             rev = {"out": "in", "in": "out"}.get(direction, direction)
             sw = shortest_path_pairs(
                 graph, types=types, direction=rev,
@@ -447,14 +558,13 @@ def shortest_path_pairs(
     edge_dt = edges.schema["_e"].dataType
     vddl = _vertex_ddl(graph)
 
-    hard_max = max_hops if max_hops is not None else DEFAULT_MAX_HOPS
     if min_hops and min_hops > 0:
+        hard_max = max_hops if max_hops is not None else DEFAULT_MAX_HOPS
         if hard_max < min_hops:
             # unsatisfiable window (sp_min: min_hops > max_hops -> 0 rows)
             return _empty_sp_result(starts, edge_dt, vddl)
         return _sp_exhaustive(
-            graph, starts, targets, edges, edge_dt, vddl, vscan,
-            min_hops, hard_max, all_paths, slim,
+            starts, targets, edges, edge_dt, vddl, vscan, min_hops, hard_max, all_paths, slim,
         )
 
     # Target-closure pruning: every vertex on a path that ENDS at a target
@@ -467,30 +577,17 @@ def shortest_path_pairs(
     # target label); when targets reach most of the graph it degrades to
     # one extra pass over the edges, a constant factor the per-source
     # savings still dominate.
-    # Driver-sync budget (VERDICT r3 #4): ONE eager checkpoint job per hop,
-    # and the EDGE table is shuffled ONCE — repartitioned by the join key
-    # up front (LogicalRDD keeps the partitioning through localCheckpoint),
-    # so every hop's join exchanges only the tiny frontier side.  This is
-    # the property that matters at 100 TB: the big table never re-shuffles
-    # per iteration.  Each hop's new-vertex set is anti-joined against
-    # everything reached so far, so the per-hop sets are DISJOINT — `reach`
-    # is their plain lazy union of cached pieces (no distinct, no
-    # checkpoint of its own), and the drain probe reads the just-cached
-    # step for free.
     npart = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # The unified edge scan (per-label union + struct build) costs a full
     # pass each time it is read; the iterative loops read it once per hop,
     # so for the slim traversal materialize the thin (src, dst) projection
     # ONCE and let every hop hit the cached rows instead (the path-carrying
     # mode keeps the lazy scan — its per-hop frontier join needs the edge
-    # payload anyway).
-    # The materialized thin table is query-independent (types + direction
-    # only), so memoize it per Graph snapshot — the Spark analogue of the
-    # reference's whole-graph GGC adjacency cache (age_global_graph.c):
-    # repeated traversal calls over the same snapshot reuse the cached
-    # blocks instead of re-scanning the edge tables.  Keyed through
-    # _scan_cached, which pins the underlying scan identity, so any label
-    # swap/write snapshot self-invalidates.
+    # payload anyway).  The thin table is query-independent (types +
+    # direction only), so it is memoized per Graph snapshot — the Spark
+    # analogue of the reference's whole-graph GGC adjacency cache
+    # (age_global_graph.c); _scan_cached pins the underlying scan identity,
+    # so any label swap/write snapshot self-invalidates.
     thin_lazy = edges.select("_s", "_d")
     if slim:
         edges_thin = graph._scan_cached(
@@ -500,11 +597,6 @@ def shortest_path_pairs(
         )
     else:
         edges_thin = thin_lazy
-    edges_by_d = None  # pre-partitioned fallback, built only if ever needed
-    # lazy checkpoint: the count() right below is the materializing action,
-    # so each checkpoint+count pair costs ONE job instead of two — at ~20
-    # sequential hops the saved short jobs are a measurable slice of SP
-    # wall time
     ep_fused = None
     if _chosen:
         # Swapped run: the closure loop below runs zero rounds, so the
@@ -517,120 +609,51 @@ def shortest_path_pairs(
         # as marker-filtered blocks: one driver-blocking checkpoint
         # planning instead of two, zero recompute (post-checkpoint
         # filters are block scans).  Seed counters are never read in this
-        # lane — skip the counting job too.
+        # lane — skip the counting job too.  The swapped targets are the
+        # ORIGINAL (large) start set, whose backward closure approaches the
+        # whole graph — a closure BFS would cost driver rounds for
+        # near-zero selectivity; the cardinality swap already encodes the
+        # small-set optimization.
         ep_fused = (
             starts.select(F.lit(1).alias("_m"), F.col("src").alias("_id"))
-            .unionByName(
-                targets.select(F.lit(0).alias("_m"), F.col("_tgt").alias("_id"))
-            )
+            .unionByName(targets.select(F.lit(0).alias("_m"), F.col("_tgt").alias("_id")))
             .localCheckpoint(eager=False)
         )
         starts = ep_fused.filter(F.col("_m") == 1).select(F.col("_id").alias("src"))
         reach0 = ep_fused.filter(F.col("_m") == 0).select(F.col("_id").alias("_rv"))
-        reach_parts = [reach0]
-        bfront = reach0
-        n_bfront = n_reach = 0
-    else:
-        reach0 = targets.select(F.col("_tgt").alias("_rv")).localCheckpoint(eager=False)
-        reach_parts = [reach0]
-        bfront = reach0
-        n_bfront = reach0.count()
-        n_reach = n_bfront
-    def _expand_back(front, n_front, reach, n_reach):
-        """One backward hop: predecessors of `front` not yet in `reach`.
-        The frontier/reached sets are usually tiny next to the edge table:
-        broadcast them into a join against the RAW edge scan (no edge
-        shuffle at all — the scan streams map-side).  The row-count guard
-        comes free off the cached checkpoints; past it, fall back to a
-        once-shuffled edge table keyed by the join side so the big table
-        still never re-exchanges per hop."""
-        nonlocal edges_by_d
-        if n_front < _SP_BCAST_ROWS:
-            joined = F.broadcast(front).join(
-                edges_thin, front["_rv"] == edges_thin["_d"]
-            )
-        else:
-            if edges_by_d is None:
-                edges_by_d = graph._scan_cached(
-                    ("sp_thin_by_d", tuple(types or ()), direction, npart),
-                    [graph.scan_edges(types)],
-                    lambda: edges_thin.repartition(npart, "_d").localCheckpoint(eager=True),
-                )
-            joined = front.join(edges_by_d, front["_rv"] == edges_by_d["_d"])
-        rc = F.broadcast(reach) if n_reach < _SP_BCAST_ROWS else reach
-        return (
-            joined.select(F.col("_s").alias("_rv"))
-            .distinct()
-            .join(rc, "_rv", "left_anti")
-        )
-
-    # TWO hops per driver round: the closure only needs the SET, so hop
-    # 2k+1 rides as a LAZY checkpoint (its stage runs once inside hop
-    # 2k+2's job — still exactly one pass over the edges per hop) and only
-    # the round's union materializes eagerly.  Halves the scheduling
-    # rounds — the dominant cost of the loop at local scale — without
-    # changing the per-hop data movement that matters at 100 TB.
-    for _ in range(0 if _chosen else (hard_max + 1) // 2):
-        reach = reach_parts[0]
-        for p in reach_parts[1:]:
-            reach = reach.unionByName(p)
-        s1 = _expand_back(bfront, n_bfront, reach, n_reach).localCheckpoint(
-            eager=False
-        )
-        # hop 2: s1's size is unknown pre-action; size the guards with the
-        # current frontier as the proxy (a wrong guess costs one hop's
-        # plan shape, never correctness)
-        s2 = _expand_back(
-            s1, n_bfront, reach.unionByName(s1), n_reach + n_bfront
-        )
-        # s1 and s2 are each distinct and mutually disjoint (s2 anti-joins
-        # reach ∪ s1), so the union needs no extra dedup shuffle
-        step = s1.unionByName(s2).localCheckpoint(eager=False)
-        # count + drain probe in ONE job (the _sp_slim_bfs trick): marker 2
-        # is non-empty iff some reached vertex has a predecessor edge — if
-        # not, the next round is provably empty and its checkpoint plans
-        # (each an edge pass at AQE plan time) are never built.
-        # Orientation: STREAM the edges and hash the (small, materialized)
-        # step side — step-semi-edges would build a hash table over the
-        # whole edge table before LocalLimit could fire (measured ~2x the
-        # cost at sf0.1), while edges-semi-step short-circuits at the first
-        # matching edge in continuing rounds.  Emptiness is equivalent:
-        # an edge into step exists iff a step vertex has a predecessor.
-        # No broadcast hint — step's blocks are materialized, so AQE sizes
-        # the build side at runtime (an oversized step degrades to a
-        # shuffle instead of a driver-killing broadcast).
-        cprobe = (
-            edges_thin.join(step, edges_thin["_d"] == step["_rv"], "left_semi")
-            .select(F.lit(2).alias("_h"))
-            .limit(1)
-        )
-        ccounts = {
-            r["_h"]: r["n"]
-            for r in step.select(F.lit(1).alias("_h"))
-            .unionAll(cprobe)
-            .groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_bfront = ccounts.get(1, 0)
-        if n_bfront == 0:
-            break
-        n_reach += n_bfront
-        reach_parts.append(step)
-        bfront = step
-        if ccounts.get(2, 0) == 0:
-            break
-    if _chosen:
-        # swapped run: the targets here are the ORIGINAL (large) start
-        # set, whose backward closure approaches the whole graph — a
-        # closure BFS would cost driver rounds for near-zero selectivity.
-        # The cardinality swap already encodes the small-set optimization.
         if slim:
             edges = edges_thin
     else:
-        reach = reach_parts[0]
-        for p in reach_parts[1:]:
-            reach = reach.unionByName(p)
+        # lazy checkpoint: the count() is the materializing action, so the
+        # checkpoint+count pair costs ONE job instead of two
+        reach0 = targets.select(F.col("_tgt").alias("_rv")).localCheckpoint(eager=False)
+        n_reach = reach0.count()
+        def edges_by_d():
+            # the partitioned fallback is query-independent: cached per snapshot
+            return graph._scan_cached(
+                ("sp_thin_by_d", tuple(types or ()), direction, npart),
+                [graph.scan_edges(types)],
+                lambda: edges_thin.repartition(npart, "_d").localCheckpoint(eager=True),
+            )
+
+        def expand_back(front, n_front, reach, n_reach):
+            """Predecessors of ``front`` not yet reached."""
+            rc = F.broadcast(reach) if n_reach < _SP_BCAST_ROWS else reach
+            return (
+                _gated_join(front, "_rv", n_front, edges_thin, "_d", edges_by_d)
+                .select(F.col("_s").alias("_rv"))
+                .distinct()
+                .join(rc, "_rv", "left_anti")
+            )
+
+        # the closure keeps s1 and s2 as reached pieces and continues from
+        # s2 alone: every predecessor of s1 is already in s2 or reached
+        reach_parts = [reach0]
+        _, n_reach = _two_hop_rounds(
+            reach0, n_reach, reach_parts, n_reach, expand_back,
+            edges_thin, "_d", "_rv", max_hops,
+        )
+        reach = _union_all(reach_parts)
         rc = F.broadcast(reach) if n_reach < _SP_BCAST_ROWS else reach
         if slim:
             # prune the CACHED thin table — the forward hops then never
@@ -643,90 +666,58 @@ def shortest_path_pairs(
     if slim:
         # the target-id set is already cached as reach0 — reuse it for the
         # per-hop hit joins rather than re-filtering the vertex scan
-        targets_cached = reach0.select(F.col("_rv").alias("_tgt"))
         return _sp_slim_bfs(
-            starts, targets_cached, edges, edge_dt, vddl, hard_max, all_paths,
-            n_starts=_n_starts, starts_unique=starts_unique,
+            starts, reach0.select(F.col("_rv").alias("_tgt")), edges, edge_dt, vddl,
+            max_hops, all_paths, n_starts=_n_starts, starts_unique=starts_unique,
             starts_materialized=ep_fused is not None,
         )
+    return _sp_full_paths(starts, targets, edges, vscan, edge_dt, vddl, max_hops, all_paths)
 
-    frontier = starts.distinct().select(
-        F.col("src"),
-        F.col("src").alias("cur"),
-        F.expr("array()").cast(f"array<{edge_dt.simpleString()}>").alias("edges"),
-        F.expr("array()").cast(f"array<{vddl}>").alias("nodes"),
-    )
-    # BFS visited set per source (vertex-level pruning IS correct for
-    # shortest paths, unlike VLE): (src, vertex)
+
+def _sp_full_paths(starts, targets, edges, vscan, edge_dt, vddl, max_hops, all_paths):
+    """Path-carrying BFS (the scalar shortest_path(a, b) lane).
+
+    Shortest paths are computed per (src, dst) PAIR: a source must keep
+    expanding after its first hit, or pairs to farther targets are lost
+    (the reference computes a path per endpoint pair, ``age_vle.c:3877``).
+    Which targets a source can still reach is unknowable mid-BFS, so there
+    is NO valid per-source early stop: termination is visited-set frontier
+    drain (each source stops when it runs out of unvisited vertices) —
+    also cheaper than tracking found pairs, which costs extra distinct +
+    aggregate + anti-join shuffles per hop. A (src, dst) pair cannot be
+    re-emitted at a later hop: dst enters the visited set when first hit.
+    Vertex-level pruning IS correct for shortest paths, unlike VLE."""
+    frontier = _path_frontier(starts.distinct(), edge_dt, vddl)
     visited = frontier.select("src", F.col("cur").alias("vid"))
 
-    found_parts: list[DataFrame] = []
+    def hits(paths, hop):
+        return _emit(paths.join(targets, paths["cur"] == targets["_tgt"]), hop)
 
-    # Shortest paths are computed per (src, dst) PAIR: a source must keep
-    # expanding after its first hit, or pairs to farther targets are lost
-    # (the reference computes a path per endpoint pair, ``age_vle.c:3877``).
-    # Which targets a source can still reach is unknowable mid-BFS, so there
-    # is NO valid per-source early stop: termination is visited-set frontier
-    # drain (each source stops when it runs out of unvisited vertices) —
-    # also cheaper than tracking found pairs, which costs extra distinct +
-    # aggregate + anti-join shuffles per hop. A (src, dst) pair cannot be
-    # re-emitted at a later hop: dst enters the visited set when first hit.
-
-    hit0 = frontier.join(targets, frontier["cur"] == targets["_tgt"]).select(
-        "src", F.col("cur").alias("dst"), "edges", "nodes", F.lit(0).alias("hops")
-    )
-    found_parts.append(hit0)
-
-    for hop in range(1, hard_max + 1):
-        if frontier.isEmpty():
-            break
-        joined = frontier.join(edges, frontier["cur"] == edges["_s"]).select(
-            F.col("src"),
-            F.col("_d").alias("cur"),
-            F.concat(F.col("edges"), F.array(F.col("_e"))).alias("edges"),
-            F.col("nodes"),
-        )
+    found = [hits(frontier, 0)]
+    hop = 1
+    while max_hops is None or hop <= max_hops:
+        joined = _extend(frontier, edges, isomorphic=False)
         joined = joined.join(
             visited,
             (joined["src"] == visited["src"]) & (joined["cur"] == visited["vid"]),
             "left_anti",
-        )
-        joined = joined.localCheckpoint(eager=False)
-        hits = joined.join(targets, joined["cur"] == targets["_tgt"])
-        emitted = hits.select(
-            "src", F.col("cur").alias("dst"), "edges", "nodes", F.lit(hop).alias("hops")
-        )
-        if not all_paths:
-            emitted = emitted.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("src", "dst")
-                    .orderBy(F.transform(F.col("edges"), lambda x: x.getField("id")))
-                ),
-            ).filter(F.col("_rn") == 1).drop("_rn")
-        found_parts.append(emitted)
+        ).localCheckpoint(eager=False)
+        (n,), more = _round_probe([joined.limit(1)], edges, "_s", joined)
+        if n == 0:
+            break
+        found.append(hits(joined, hop) if all_paths else _first_path_per_pair(hits(joined, hop)))
+        if not more:
+            break
         visited = visited.unionByName(
             joined.select("src", F.col("cur").alias("vid"))
         ).distinct().localCheckpoint(eager=False)
-        frontier = joined.join(
-            vscan.select(
-                F.col("id").alias("_vid"),
-                F.struct(F.col("id"), F.col("label"), F.col("properties")).alias("_v"),
-            ),
-            joined["cur"] == F.col("_vid"),
-        ).select(
-            "src", "cur", "edges",
-            F.concat(F.col("nodes"), F.array(F.col("_v"))).alias("nodes"),
-        )
-
-    out = found_parts[0]
-    for p in found_parts[1:]:
-        out = out.unionByName(p)
-    return out
+        frontier = _append_interior(joined, vscan)
+        hop += 1
+    return _union_all(found)
 
 
 def _sp_slim_bfs(
-    starts, targets, edges, edge_dt, vddl, hard_max: int, all_paths: bool,
+    starts, targets, edges, edge_dt, vddl, max_hops: Optional[int], all_paths: bool,
     n_starts: Optional[int] = None, starts_unique: bool = False,
     starts_materialized: bool = False,
 ) -> DataFrame:
@@ -744,236 +735,99 @@ def _sp_slim_bfs(
     frontier = (starts if starts_unique else starts.distinct()).select(
         F.col("src"), F.col("src").alias("cur"), F.lit(1).cast("long").alias("cnt")
     )
-    if not starts_materialized:
-        # materialized by the count below; when the caller already fused
-        # the starts into an endpoint checkpoint, consumers re-project the
-        # marker-filtered blocks instead (a block scan, not a recompute)
+    if not (starts_materialized and starts_unique):
+        # materialized by the count (or the first round's probe) below;
+        # starts the caller fused into an endpoint checkpoint are re-read
+        # as marker-filtered blocks instead — unless they still need their
+        # distinct(), which this checkpoint then runs exactly once
         frontier = frontier.localCheckpoint(eager=False)
-    # visited = lazy union of the per-hop frontiers: each is per-(src, cur)
-    # distinct by construction (groupBy) and anti-joined against everything
-    # before it, so the pieces are disjoint — no dedup, no extra
-    # materialization job (one eager checkpoint per hop total)
-    visited_parts = [frontier.select("src", F.col("cur").alias("vid"))]
-    parts = [
-        frontier.join(targets, frontier["cur"] == targets["_tgt"]).select(
-            "src", F.col("cur").alias("dst"), "cnt", F.lit(0).alias("hops")
-        )
-    ]
     # the swapped caller already knows the exact (distinct, probe-measured)
     # start count — skip the counting job; the lazy checkpoint then
-    # materializes inside the first round's counting job
+    # materializes inside the first round's probe job
     n_frontier = frontier.count() if n_starts is None else n_starts
-    n_visited = n_frontier
     npart = int(edges2.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges_by_s = None  # pre-partitioned fallback, built only if ever needed
-    def _expand_fwd(fr, n_fr, visited, n_vis):
-        """One forward hop: (src, cur, cnt) successors of `fr` not yet
-        visited.  Broadcast the small sides (guarded by counts — for the
-        fused second hop, by the round-entry proxies, same rule as the
-        closure loop: a wrong guess costs one hop's plan shape, never
-        correctness); the (pruned, lazy) edge scan streams map-side.
-        Past the guard, shuffle against a once-partitioned edge table."""
-        nonlocal edges_by_s
-        if n_fr < _SP_BCAST_ROWS:
-            expanded = F.broadcast(fr).join(edges2, fr["cur"] == edges2["_s"])
-        else:
-            if edges_by_s is None:
-                edges_by_s = edges2.repartition(npart, "_s").localCheckpoint(eager=True)
-            expanded = fr.join(edges_by_s, fr["cur"] == edges_by_s["_s"])
-        nxt = expanded.groupBy("src", F.col("_d").alias("cur")).agg(
-            F.sum("cnt").alias("cnt")
+    edges_by_s = _once(lambda: edges2.repartition(npart, "_s").localCheckpoint(eager=True))
+
+    def expand_fwd(fr, n_fr, visited, n_vis):
+        """(src, cur, cnt) successors of ``fr`` not yet visited."""
+        nxt = (
+            _gated_join(fr, "cur", n_fr, edges2, "_s", edges_by_s)
+            .groupBy("src", F.col("_d").alias("cur"))
+            .agg(F.sum("cnt").alias("cnt"))
         )
         vs = F.broadcast(visited) if n_vis < _SP_BCAST_ROWS else visited
         return nxt.join(
-            vs,
-            (nxt["src"] == visited["src"]) & (nxt["cur"] == visited["vid"]),
-            "left_anti",
+            vs, (nxt["src"] == visited["src"]) & (nxt["cur"] == visited["cur"]), "left_anti"
         )
 
-    def _hits(fr, hop):
+    def hits(fr, hop):
         return fr.join(targets, fr["cur"] == targets["_tgt"]).select(
             "src", F.col("cur").alias("dst"), "cnt", F.lit(hop).alias("hops")
         )
 
-    # TWO hops per driver round (the closure-loop trick, VERDICT r9):
-    # hop 2k+1 rides as a LAZY checkpoint whose stage runs inside the
-    # round's single counting job, so the sequential scheduling rounds —
-    # the dominant BFS cost at local scale — halve without changing the
-    # per-hop joins that matter at 100 TB.  One marker-keyed aggregate
-    # returns both hop sizes in one action.
-    hop = 1
-    while hop <= hard_max:
-        visited = visited_parts[0]
-        for p in visited_parts[1:]:
-            visited = visited.unionByName(p)
-        s1 = _expand_fwd(frontier, n_frontier, visited, n_visited).localCheckpoint(
-            eager=False
-        )
-        # NOTE (measured, negative): fusing s1+s2 into ONE marker-split
-        # checkpointed union per round looked like a driver-round saving
-        # but was 4-6x SLOWER — without s1's own checkpoint, every
-        # broadcast-exchange build over the lazy s1 subtree (s2's frontier
-        # side, the vis2 anti-join side, the union branch) re-runs s1's
-        # whole expansion INCLUDING its edge-table pass; broadcast builds
-        # do not reuse the inner shuffle exchange across branches.  The
-        # per-hop checkpoint is load-bearing: it pins each hop's edge pass
-        # to exactly one execution.
-        if hop == hard_max:  # odd tail: single-hop round
-            if s1.isEmpty():
-                break
-            parts.append(_hits(s1, hop))
-            break
-        vis2 = visited.unionByName(s1.select("src", F.col("cur").alias("vid")))
-        s2 = _expand_fwd(s1, n_frontier, vis2, n_visited + n_frontier).localCheckpoint(
-            eager=False
-        )
-        # Drain probe, fused into the round's one counting job: marker 3
-        # is non-empty iff s2's frontier has ANY outgoing edge — when it
-        # does not, the next round's expansion is provably empty, so its
-        # two checkpoint plans (whose AQE stage materialization costs a
-        # full edge pass each, paid at PLAN time) are never built.  The
-        # probe is a LocalLimit(1) branch: continuing rounds short-circuit
-        # at the first frontier-sourced edge; the drain round pays one
-        # bounded pass INSTEAD of the two it used to spend discovering
-        # emptiness the slow way.  Orientation: STREAM the edges and hash
-        # the (small, materialized) s2 side — s2-semi-edges would build a
-        # hash table over the whole edge table before LocalLimit could
-        # fire (measured ~2x the cost at sf0.1).  Emptiness is
-        # equivalent: an edge out of s2 exists iff s2 can expand.  No
-        # broadcast hint — AQE sizes the build side from s2's blocks.
-        probe = (
-            edges2.join(s2, edges2["_s"] == s2["cur"], "left_semi")
-            .select(F.lit(3).alias("_h"))
-            .limit(1)
-        )
-        counts = {
-            r["_h"]: r["n"]
-            for r in s1.select(F.lit(1).alias("_h"))
-            .unionAll(s2.select(F.lit(2).alias("_h")))
-            .unionAll(probe)
-            .groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n1, n2 = counts.get(1, 0), counts.get(2, 0)
-        if n1 == 0:
-            break
-        parts.append(_hits(s1, hop))
-        visited_parts.append(s1.select("src", F.col("cur").alias("vid")))
-        n_visited += n1
-        if n2 == 0:
-            break
-        parts.append(_hits(s2, hop + 1))
-        visited_parts.append(s2.select("src", F.col("cur").alias("vid")))
-        n_visited += n2
-        frontier, n_frontier = s2, n2
-        hop += 2
-        if counts.get(3, 0) == 0:
-            # no frontier vertex has an outgoing edge: the next round's
-            # s1 is empty before its anti-join — stop without planning it
-            break
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    # visited: per-(src, cur) distinct pieces (groupBy), each anti-joined
+    # against everything before it — disjoint, so a lazy union suffices
+    # (the anti-join reads only (src, cur); the optimizer prunes cnt)
+    layers, _ = _two_hop_rounds(
+        frontier, n_frontier, [frontier], n_frontier, expand_fwd, edges2, "_s", "cur", max_hops
+    )
+    out = _union_all([hits(frontier, 0)] + [hits(s, h) for h, s in layers])
     if all_paths:
         # one output row per minimal path
         out = out.select(
             "src", "dst", "hops", F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_i")
-        ).drop("_i")
-    else:
-        out = out.select("src", "dst", "hops")
+        )
     # schema-compat empty path payload (the slim caller never reads these)
-    return out.select(
-        "src", "dst",
-        F.expr("array()").cast(f"array<{edge_dt.simpleString()}>").alias("edges"),
-        F.expr("array()").cast(f"array<{vddl}>").alias("nodes"),
-        "hops",
-    )
+    return out.select("src", "dst", *_empty_arrays(edge_dt, vddl), "hops")
 
 
 def _empty_sp_result(starts, edge_dt, vddl) -> DataFrame:
     return starts.select(
-        F.col("src"),
-        F.col("src").alias("dst"),
-        F.expr("array()").cast(f"array<{edge_dt.simpleString()}>").alias("edges"),
-        F.expr("array()").cast(f"array<{vddl}>").alias("nodes"),
-        F.lit(0).alias("hops"),
+        F.col("src"), F.col("src").alias("dst"), *_empty_arrays(edge_dt, vddl), F.lit(0).alias("hops")
     ).limit(0)
 
 
 def _sp_exhaustive(
-    graph, starts, targets, edges, edge_dt, vddl, vscan,
+    starts, targets, edges, edge_dt, vddl, vscan,
     min_hops: int, hard_max: int, all_paths: bool, slim: bool,
 ) -> DataFrame:
     """min_hops regime (``age_vle.c:3600``): enumerate EDGE-distinct paths
     (vertices may repeat) level by level; for each (src, dst) pair the first
     depth >= min_hops with a hit is its answer — later depths for that pair
     are suppressed.  Terminates by frontier drain (edge-distinctness bounds
-    path length by the edge count) or hard_max."""
-    frontier = starts.distinct().select(
-        F.col("src"),
-        F.col("src").alias("cur"),
-        F.expr("array()").cast(f"array<{edge_dt.simpleString()}>").alias("edges"),
-        F.expr("array()").cast(f"array<{vddl}>").alias("nodes"),
-    )
+    path length by the edge count), when every pair is found, or at
+    hard_max.  One probe job per hop: the hop's new pair count (from
+    min_hops on), its frontier size and whether any edge leaves it."""
+    frontier = _path_frontier(starts.distinct(), edge_dt, vddl)
     n_expected = frontier.count() * targets.count()
     found_pairs: Optional[DataFrame] = None
     n_found = 0
     parts: list[DataFrame] = []
     for hop in range(1, hard_max + 1):
-        joined = frontier.join(edges, frontier["cur"] == edges["_s"])
-        joined = joined.filter(
-            ~F.exists(F.col("edges"), lambda x: x.getField("id") == F.col("_e").getField("id"))
-        ).select(
-            F.col("src"),
-            F.col("_d").alias("cur"),
-            F.concat(F.col("edges"), F.array(F.col("_e"))).alias("edges"),
-            F.col("nodes"),
-        ).localCheckpoint(eager=False)
+        joined = _extend(frontier, edges, isomorphic=True).localCheckpoint(eager=False)
+        pieces = [joined.limit(1)]
         if hop >= min_hops:
-            hits = joined.join(targets, joined["cur"] == targets["_tgt"]).select(
-                "src", F.col("cur").alias("dst"), "edges", "nodes",
-                F.lit(hop).alias("hops"),
-            )
+            hits = _emit(joined.join(targets, joined["cur"] == targets["_tgt"]), hop)
             if found_pairs is not None:
                 hits = hits.join(found_pairs, ["src", "dst"], "left_anti")
             if not all_paths:
-                hits = hits.withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("src", "dst")
-                        .orderBy(F.transform(F.col("edges"), lambda x: x.getField("id")))
-                    ),
-                ).filter(F.col("_rn") == 1).drop("_rn")
+                hits = _first_path_per_pair(hits)
             hits = hits.localCheckpoint(eager=False)
             pairs = hits.select("src", "dst").distinct().localCheckpoint(eager=False)
-            c = pairs.count()
-            if c:
-                parts.append(hits)
-                found_pairs = (
-                    pairs if found_pairs is None
-                    else found_pairs.unionByName(pairs).localCheckpoint(eager=False)
-                )
-                n_found += c
-                if n_found >= n_expected:
-                    break
-        if not slim:
-            joined = joined.join(
-                vscan.select(
-                    F.col("id").alias("_vid"),
-                    F.struct(F.col("id"), F.col("label"), F.col("properties")).alias("_v"),
-                ),
-                joined["cur"] == F.col("_vid"),
-            ).select(
-                "src", "cur", "edges",
-                F.concat(F.col("nodes"), F.array(F.col("_v"))).alias("nodes"),
+            pieces.append(pairs)
+        counts, more = _round_probe(pieces, edges, "_s", joined)
+        if hop >= min_hops and counts[1]:
+            parts.append(hits)
+            found_pairs = (
+                pairs if found_pairs is None
+                else found_pairs.unionByName(pairs).localCheckpoint(eager=False)
             )
-        frontier = joined
-        if frontier.isEmpty():
+            n_found += counts[1]
+            if n_found >= n_expected:
+                break
+        if counts[0] == 0 or not more:
             break
+        frontier = joined if slim else _append_interior(joined, vscan)
     if not parts:
         return _empty_sp_result(starts, edge_dt, vddl)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_all(parts)

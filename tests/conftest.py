@@ -10,6 +10,9 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # no [Stage ...] progress bars: they filled over a third of the
+        # log bytes and pushed the pytest summary out of a tail
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         # per-op Python call-site capture costs ~4 py4j round-trips per
         # Column method — 3-4x the compiler's driver-side plan time

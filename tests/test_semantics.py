@@ -261,6 +261,27 @@ def test_prepared_statement(social):
     assert "match" in age.get_cypher_keywords()
 
 
+def test_prepare_matches_cypher(spark):
+    """prepare() runs cypher()'s compile path: session-aware functions,
+    the catalog following a write, and $param binding all agree."""
+    age = AgeSession(spark)
+    g = age.create_graph("prep_eq")
+    g = age.cypher(g, "UNWIND range(1, 4) AS i CREATE (:T {k: i})").graph
+
+    def same(stmt, params=None):
+        want = sorted(map(tuple, age.cypher(g, stmt, params).df.collect()))
+        got = sorted(map(tuple, age.prepare(g, stmt)(params).df.collect()))
+        assert got == want, stmt
+        return got
+
+    assert same("RETURN graph_stats('prep_eq')")
+    assert same("MATCH (n:T) WHERE n.k > $min RETURN n.k AS k", {"min": 2}) == [(3,), (4,)]
+    res = age.prepare(g, "CREATE (:T {k: 9})")()
+    assert res.graph is not g
+    assert age.graphs["prep_eq"] is res.graph
+    assert age.cypher(res.graph, "MATCH (n:T) RETURN count(*) AS c").df.collect()[0].c == 5
+
+
 def test_map_projection(social):
     age, g = social
     got = age.cypher(

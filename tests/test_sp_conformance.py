@@ -50,8 +50,8 @@ def sp_big(spark):
     return age, g
 
 
-def _vid(age, g, i):
-    return age.cypher(g, f"MATCH (n:N {{id: {i}}}) RETURN id(n) AS i").df.collect()[0].i
+def _vid(age, g, i, label="N", key="id"):
+    return age.cypher(g, f"MATCH (n:{label} {{{key}: {i}}}) RETURN id(n) AS i").df.collect()[0].i
 
 
 def _hops(age, g, call):
@@ -144,8 +144,6 @@ def test_direction_choice_swap_equivalence(sp_big):
     # engine arm is trusted to check the other
     from collections import defaultdict, deque
 
-    from age_spark.runtime.vle import DEFAULT_MAX_HOPS
-
     edges = [
         (r.start_id, r.end_id)
         for r in g.scan_edges(None).select("start_id", "end_id").collect()
@@ -168,8 +166,6 @@ def test_direction_choice_swap_equivalence(sp_big):
             dq = deque([src])
             while dq:
                 u = dq.popleft()
-                if dist[u] >= DEFAULT_MAX_HOPS:
-                    continue
                 for v in adj[u]:
                     if v not in dist:
                         dist[v] = dist[u] + 1
@@ -188,3 +184,23 @@ def test_direction_choice_swap_equivalence(sp_big):
         assert len(expected) > 0
         assert swapped == expected, "swapped arm diverges from ground truth"
         assert forced == expected, "unswapped arm diverges from ground truth"
+
+
+def test_null_max_hops_runs_until_drain(spark):
+    """A NULL max_hops leaves the BFS unbounded, like the reference's:
+    on a 32-vertex directed ring the pair 31 hops apart is found (a depth
+    cap of 30 used to drop it)."""
+    from pyspark.sql import functions as F
+
+    age = AgeSession(spark)
+    g = age.create_graph("sp_ring32")
+    g = age.load_vertices(
+        g, "V", spark.range(32).select(F.col("id"), F.col("id").alias("i")), id_col="id"
+    )
+    g = age.load_edges(
+        g, "R",
+        spark.range(32).select(F.col("id").alias("s"), ((F.col("id") + 1) % 32).alias("t")),
+        start_col="s", end_col="t", start_label="V", end_label="V",
+    )
+    a, b = _vid(age, g, 0, "V", "i"), _vid(age, g, 31, "V", "i")
+    assert _hops(age, g, f'CALL shortest_path({a}, {b}, "R", "out")') == [31]

@@ -167,6 +167,9 @@ else:
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.sql.session.timeZone", "UTC")
             .config("spark.ui.enabled", "false")
+            # this builder can run before conftest's: keep the same
+            # no-progress-bar setting, or the log fills with [Stage ...]
+            .config("spark.ui.showConsoleProgress", "false")
             .config("spark.driver.memory", "8g")
             .config("spark.python.sql.dataFrameDebugging.enabled", "false")
             .appName("age_spark-tests")

@@ -276,6 +276,13 @@ def test_vle_matches_trail_enumeration(age, graph, rng, direction, src_label, ds
     all_paths=True, direction="out", min_hops=0, max_hops=None, scalar=False,
     src="A", tgt=2,
 )
+# a start exactly max_hops (odd) hops from the target: the target closure
+# must keep the last hop's predecessors
+@example(
+    graph=(["A"] * 4, [(0, 1), (1, 2), (2, 3)]),
+    all_paths=False, direction="out", min_hops=0, max_hops=3, scalar=False,
+    src="A", tgt=3,
+)
 def test_shortest_paths_match_oracle(
     age, graph, all_paths, direction, min_hops, max_hops, scalar, src, tgt
 ):
